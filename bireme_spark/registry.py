@@ -267,10 +267,9 @@ def _load() -> None:
         "corpus",
         "tpch_deep",
     ):
-        try:
-            mod = __import__(f"bireme_spark.queries.{mod_name}", fromlist=["QUERIES", "ORACLE"])
-        except ImportError:
-            continue
+        # a module that fails to import raises: skipping it would
+        # silently shrink the registry
+        mod = __import__(f"bireme_spark.queries.{mod_name}", fromlist=["QUERIES", "ORACLE"])
         _QUERIES.update(getattr(mod, "QUERIES", {}))
         _ORACLE.update(getattr(mod, "ORACLE", {}))
     recorded = _recorded_rounds()

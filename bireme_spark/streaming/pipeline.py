@@ -7,12 +7,18 @@ Shape:
     readStream (kafka | file) of envelope JSON
       → parse (Maxwell/Debezium from_json)
       → table routing (table_map filter)
-      → foreachBatch: per-table compact → DELETE+COPY merge
+      → foreachBatch: per-table compact (cut once) → DELETE+COPY merge
 
 Each micro-batch IS bireme's LoadTask: the batch compaction and the
 anti-join merge are exactly the batch operators
 (operators/cdc.compact / apply_changes), so batch and streaming
-semantics provably agree (tested in tests/test_streaming.py).
+semantics provably agree (tested in tests/test_streaming.py). The
+micro-batch is persisted for the whole foreachBatch call; each
+table's compacted batch is ``localCheckpoint``-ed once and every
+later step (changed-bucket set, anti-join, insert set) reads the
+checkpoint. The multi-table pipeline merges its tables concurrently,
+one thread per table, as bireme runs one loader per table
+(``ChangeLoader.java``).
 
 State layout — PK-hash-bucketed versioned parquet with an atomic
 manifest commit:
@@ -24,16 +30,16 @@ manifest commit:
 A micro-batch rewrites ONLY the buckets whose keys changed: the
 changed-bucket set comes off the compacted batch (≤ num_buckets
 values), the base read prunes to those buckets' committed versions,
-and the merge stages each changed bucket's next version — then one
-manifest replace flips all of them atomically (readers see the whole
-batch or none of it; a crash mid-batch leaves only invisible orphan
-dirs that the retry skips past and later retention reaps). Unchanged
-buckets are never read or written — per-trigger write amplification
-is O(|changed buckets|), not O(|base|). On a cluster you'd swap this
-sink for Delta/Iceberg MERGE (same bucket-pruned plan with atomic
-commit) or a Greenplum/JDBC DELETE+COPY writer; versioned bucket dirs
-keep the test environment dependency-free while exercising the same
-incremental plan.
+and the merge stages each changed bucket's next version as one
+file — then one manifest replace flips all of them atomically
+(readers see the whole batch or none of it; a crash mid-batch leaves
+only invisible orphan dirs that the retry skips past and later
+retention reaps). Unchanged buckets are never read or written —
+per-trigger write amplification is O(|changed buckets|), not
+O(|base|). On a cluster you'd swap this sink for Delta/Iceberg MERGE
+(same bucket-pruned plan with atomic commit) or a Greenplum/JDBC
+DELETE+COPY writer; versioned bucket dirs keep the test environment
+dependency-free while exercising the same incremental plan.
 
 Ordering: within a batch, same-key changes fold by
 ``(produce_time_ms, src_partition, src_offset)``. Maxwell's produce
@@ -51,10 +57,13 @@ options bireme's consumer config maps to (``KafkaPipeLine.java:
 from __future__ import annotations
 
 import errno
+import functools
 import os
 import shutil
-from collections.abc import Sequence
+import threading
+from collections.abc import Callable, Sequence
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -489,9 +498,10 @@ def _write_changed_buckets(
     batch_id: int,
     fence: bool = False,
 ) -> None:
-    """One job writes every changed bucket's rows; renames slot each
-    bucket dir in as its next version (empty buckets — all keys
-    deleted — get an explicit empty version so stale state clears);
+    """One job writes every changed bucket's rows, one file per
+    bucket; renames slot each bucket dir in as its next version
+    (empty buckets — all keys deleted — get an explicit empty version
+    so stale state clears);
     then ONE atomic manifest replace commits the whole batch
     (``_write_manifest``). Retention keeps (committed, next): readers
     holding the old manifest keep their snapshot, anything older —
@@ -527,7 +537,8 @@ def _write_changed_buckets(
             if (v := _latest_version(f"{target_dir}/_sb={b}")) is not None
         }
     staging = f"{target_dir}/.staging-{batch_id}"
-    merged.write.partitionBy("_sb").mode("overwrite").parquet(staging)
+    # one task per bucket, so each bucket version is one file
+    merged.repartition("_sb").write.partitionBy("_sb").mode("overwrite").parquet(staging)
     for b in changed:
         bdir = f"{target_dir}/_sb={b}"
         committed = versions.get(b)
@@ -546,6 +557,52 @@ def _write_changed_buckets(
         versions[b] = next_v
     _write_manifest(target_dir, versions, batch_id)
     shutil.rmtree(staging, ignore_errors=True)
+
+
+def _persisted_batch(fn: Callable[[DataFrame, int], None]) -> Callable[[DataFrame, int], None]:
+    """foreachBatch wrapper that persists the micro-batch around
+    ``fn`` and releases it after. The merge scans the batch several
+    times (routing, compaction, the empty probe); uncached, every scan
+    re-reads the SOURCE (re-polls Kafka) and re-derives the
+    ``monotonically_increasing_id`` offsets, which must be stable
+    within the batch."""
+
+    @functools.wraps(fn)
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = batch_df.persist()
+        try:
+            fn(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return run
+
+
+def _run_concurrently(tasks: Sequence[Callable[[], None]], limit: int) -> None:
+    """Run each task on its own ``InheritableThread``, at most
+    ``limit`` at once (bireme runs one loader per table,
+    ``ChangeLoader.java``). The thread inherits the caller's JVM local
+    properties, so the streaming query's job group and SQL execution
+    carry over. Every thread is joined before the first failure is
+    re-raised, so no task is still writing when the batch fails."""
+    slots = threading.BoundedSemaphore(limit)
+    errors: list[Exception | None] = [None] * len(tasks)
+
+    def run(i: int) -> None:
+        with slots:
+            try:
+                tasks[i]()
+            except Exception as e:  # re-raised on the calling thread
+                errors[i] = e
+
+    threads = [InheritableThread(target=run, args=(i,)) for i in range(len(tasks))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
 
 
 def run_cdc_pipeline(
@@ -576,45 +633,36 @@ def run_cdc_pipeline(
     payload_cols = [f.name for f in data_schema.fields if f.name not in key_fields]
     nb = config.num_buckets
 
+    @_persisted_batch
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # persist: the merge scans the micro-batch several times
-        # (compact fold, changed-bucket collect, per-bucket writes) —
-        # uncached, every scan re-reads the SOURCE (re-polls Kafka)
-        # and re-derives monotonically_increasing_id offsets, which
-        # must be stable within the batch (same pattern as
-        # multi_batch below)
-        batch_df = batch_df.persist()
-        try:
-            compacted = _compact_parsed(batch_df, payload_cols)
-            if config.target_jdbc_url:
-                # Greenplum/warehouse path: DELETE+COPY merge through
-                # the staged-key JDBC transaction (ChangeLoader
-                # semantics).
-                from bireme_spark.sinks.jdbc import JdbcMergeSink
+        compacted = _compact_parsed(batch_df, payload_cols)
+        if config.target_jdbc_url:
+            # Greenplum/warehouse path: DELETE+COPY merge through
+            # the staged-key JDBC transaction (ChangeLoader
+            # semantics).
+            from bireme_spark.sinks.jdbc import JdbcMergeSink
 
-                sink = JdbcMergeSink(
-                    url=config.target_jdbc_url,
-                    target_table=config.target_table or "public.target",
-                    key_cols=("key",),
-                    payload_cols=("key", *payload_cols),
-                    properties=config.jdbc_properties,
-                )
-                sink(compacted.withColumnRenamed("final_op", "op"), batch_id)
-                return
-            _merge_compacted_versioned(
-                batch_df.sparkSession,
-                config.target_dir,
-                compacted,
-                data_schema,
-                key_fields,
-                base_columns,
-                nb,
-                batch_id,
+            sink = JdbcMergeSink(
+                url=config.target_jdbc_url,
+                target_table=config.target_table or "public.target",
+                key_cols=("key",),
+                payload_cols=("key", *payload_cols),
+                properties=config.jdbc_properties,
             )
-        finally:
-            batch_df.unpersist()
+            sink(compacted.withColumnRenamed("final_op", "op"), batch_id)
+            return
+        _merge_compacted_versioned(
+            batch_df.sparkSession,
+            config.target_dir,
+            compacted,
+            data_schema,
+            key_fields,
+            base_columns,
+            nb,
+            batch_id,
+        )
 
     writer = (
         parsed.writeStream.foreachBatch(merge_batch)
@@ -671,11 +719,25 @@ def _merge_compacted_versioned(
     batch_id: int,
 ) -> None:
     """Merge one table's compacted batch into its bucket-versioned
-    parquet state (changed-bucket pruning + atomic manifest commit)."""
+    parquet state (changed-bucket pruning + atomic manifest commit).
+
+    The compacted batch is cut once: the changed-bucket set, the
+    anti-join and the insert set all read the checkpoint instead of
+    re-running parse and compaction, and the checkpoint's real size
+    lets the planner broadcast it into the anti-join, so the base is
+    not shuffled. ``localCheckpoint``, not ``persist``: a cached plan
+    keeps its pre-AQE shuffle partition count."""
     _migrate_legacy_layout(target_dir)  # before the base read
     key_col = key_fields[0]
-    compacted = compacted.withColumn("_sb", _bucket_col("key", nb))
-    changed = sorted(r._sb for r in compacted.select("_sb").distinct().collect())
+    compacted = compacted.withColumn("_sb", _bucket_col("key", nb)).localCheckpoint()
+    changed = sorted(compacted.agg(F.collect_set("_sb")).first()[0])
+    if not changed:
+        # Empty batch: no base read, no write, no manifest. A mapped
+        # table with no rows in the batch still pays its compaction
+        # jobs to get here; an up-front per-origin count pass would
+        # skip them but costs more per batch than it saves when every
+        # mapped table has rows.
+        return
 
     base_paths = _latest_paths(target_dir, changed)
     if base_paths:
@@ -739,8 +801,16 @@ def run_multi_table_pipeline(
     each table's ``from_json`` parse runs only over its own rows — N
     small typed parses, not N full-batch parses. Unmapped tables are
     dropped by construction (no mapping entry → no parse), which is
-    exactly bireme's filter() semantics. The raw batch is persisted
-    across the per-table loop and released after.
+    exactly bireme's filter() semantics.
+
+    The raw batch is persisted for the whole call. Each mapped table
+    is routed, parsed, compacted (cut once, see
+    ``_merge_compacted_versioned``) and merged on its own thread, at
+    most ``defaultParallelism`` tables at once — bireme's one loader
+    per table. Tables commit independently: when one table's merge
+    fails, the others still commit, the batch raises after every
+    thread finished, and the replay after a restart re-applies the
+    batch idempotently (pessimistic anti-join) to every table.
     """
     source = config.sources[0]
     raw = _open_stream(spark, source, config.max_events_per_trigger)
@@ -752,58 +822,46 @@ def run_multi_table_pipeline(
     for origin, target in mapping.items():
         by_target.setdefault(target, []).append(origin)
 
+    if source.kind == "debezium":
+        parse, db_path, tbl_path = parse_debezium, "$.payload.source.db", "$.payload.source.table"
+    else:
+        parse, db_path, tbl_path = parse_maxwell, "$.database", "$.table"
+
+    def sync_table(batch_df: DataFrame, batch_id: int, target: str, spec: TableSpec) -> None:
+        cond = None
+        for origin in by_target[target]:
+            # origin = "<source>.<database>.<table>"
+            _, db, tbl = origin.split(".", 2)
+            c = (F.get_json_object("value", db_path) == db) & (
+                F.get_json_object("value", tbl_path) == tbl
+            )
+            cond = c if cond is None else cond | c
+        parsed = parse(
+            batch_df.where(cond), "value", spec.data_schema, spec.key_fields, source=source.name
+        )
+        payload_cols = [f.name for f in spec.data_schema.fields if f.name not in spec.key_fields]
+        _merge_compacted_versioned(
+            batch_df.sparkSession,
+            f"{config.target_dir}/{target}",
+            _compact_parsed(parsed, payload_cols),
+            spec.data_schema,
+            spec.key_fields,
+            spec.base_columns,
+            config.num_buckets,
+            batch_id,
+        )
+
+    @_persisted_batch
     def multi_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df = batch_df.persist()
-        try:
-            for target, spec in tables.items():
-                origins = by_target.get(target)
-                if not origins:
-                    continue
-                if source.kind == "debezium":
-                    db_path, tbl_path = "$.payload.source.db", "$.payload.source.table"
-                else:
-                    db_path, tbl_path = "$.database", "$.table"
-                cond = None
-                for origin in origins:
-                    # origin = "<source>.<database>.<table>"
-                    _, db, tbl = origin.split(".", 2)
-                    c = (F.get_json_object("value", db_path) == db) & (
-                        F.get_json_object("value", tbl_path) == tbl
-                    )
-                    cond = c if cond is None else cond | c
-                sub = batch_df.where(cond)
-                if source.kind == "debezium":
-                    parsed = parse_debezium(
-                        sub, "value", spec.data_schema, spec.key_fields, source=source.name
-                    )
-                else:
-                    parsed = parse_maxwell(
-                        sub, "value", spec.data_schema, spec.key_fields, source=source.name
-                    )
-                # routing already happened on the raw envelope; tables
-                # without a mapping entry were never parsed at all
-                if parsed.isEmpty():
-                    continue
-                payload_cols = [
-                    f.name
-                    for f in spec.data_schema.fields
-                    if f.name not in spec.key_fields
-                ]
-                compacted = _compact_parsed(parsed, payload_cols)
-                _merge_compacted_versioned(
-                    batch_df.sparkSession,
-                    f"{config.target_dir}/{target}",
-                    compacted,
-                    spec.data_schema,
-                    spec.key_fields,
-                    spec.base_columns,
-                    config.num_buckets,
-                    batch_id,
-                )
-        finally:
-            batch_df.unpersist()
+        # tables without a mapping entry are never parsed at all
+        _run_concurrently(
+            [
+                functools.partial(sync_table, batch_df, batch_id, target, spec)
+                for target, spec in tables.items()
+                if target in by_target
+            ],
+            batch_df.sparkSession.sparkContext.defaultParallelism,
+        )
 
     writer = (
         raw.writeStream.foreachBatch(multi_batch)
@@ -859,6 +917,7 @@ def run_scd2_pipeline(
         + ", valid_from long, valid_to long, is_current boolean"
     )
 
+    @_persisted_batch
     def scd2_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return

@@ -116,3 +116,34 @@ def test_new_this_round_ops_are_sf1_swept():
         f"_NEW_THIS_ROUND operators absent from {records[-1].name if records else 'any SF1 record'}: "
         f"{missing} — run scripts/driver_sim.py testdata_sf1 <names> and record the sweep"
     )
+
+
+def test_registry_loads_every_query_module():
+    """All 560 registered queries load, 548 of them with an oracle."""
+    from bireme_spark import registry
+
+    assert len(registry.queries()) == 560
+    assert len(registry.oracle_sql()) == 548
+
+
+def test_broken_query_module_raises(monkeypatch):
+    """A query module that fails to import fails the registry load
+    instead of silently dropping its queries."""
+    import builtins
+
+    import pytest
+
+    from bireme_spark import registry
+
+    real_import = builtins.__import__
+
+    def import_(name, *args, **kwargs):
+        if name == "bireme_spark.queries.cdc":
+            raise ImportError("simulated broken query module")
+        return real_import(name, *args, **kwargs)
+
+    monkeypatch.setattr(registry, "_QUERIES", {})
+    monkeypatch.setattr(registry, "_ORACLE", {})
+    monkeypatch.setattr(builtins, "__import__", import_)
+    with pytest.raises(ImportError, match="simulated broken query module"):
+        registry._load()

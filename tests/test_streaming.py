@@ -11,10 +11,6 @@ from bireme_spark.sources.tables import load_table
 from bireme_spark.streaming.stats import PipelineStatListener
 import pytest
 
-# r11 (VERDICT #2): deep recompute / e2e tier — deselected from the
-# driver's default pytest path; round close runs `pytest -m ""`.
-pytestmark = pytest.mark.slow
-
 
 def test_streaming_equals_batch_snapshot(spark, sf_dir):
     listener = PipelineStatListener()
@@ -494,6 +490,206 @@ def test_multi_table_pipeline_consolidates_sharded_origins(spark, tmp_path):
     q.awaitTermination(120)
     got = {(r.k, r.v) for r in read_state(spark, f"{cfg.target_dir}/public.t").collect()}
     assert got == {(k, 1.0) for k in range(5)} | {(k, 2.0) for k in range(10, 15)}
+
+
+# Two-table Maxwell stream, one micro-batch per inner list:
+# (table, type, k, v, ts).
+_TWO_TABLE_BATCHES = [
+    [("t1", "insert", k, float(k), 1) for k in range(40)]
+    + [("t2", "insert", k, 100.0 + k, 1) for k in range(20)],
+    [("t1", "update", k, k + 0.5, 2) for k in range(40) if k % 3 == 0]
+    + [("t2", "delete", k, 100.0 + k, 2) for k in range(20) if k % 4 == 0]
+    + [("t2", "update", k, -float(k), 2) for k in range(20) if k % 4 == 1],
+    [("t1", "delete", k, 0.0, 3) for k in range(40) if k % 5 == 0]
+    + [("t1", "insert", k, float(k), 3) for k in range(40, 45)]
+    + [("t2", "insert", k, 100.0 + k, 3) for k in range(20, 25)],
+]
+
+
+def _start_two_table_stream(spark, tmp_path):
+    """Land _TWO_TABLE_BATCHES (one file per batch, on the first
+    call only) and start an availableNow multi-table pipeline over
+    them from the checkpoint; returns (config, query)."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from bireme_spark.config import PipelineConfig, SourceConfig
+    from bireme_spark.streaming.pipeline import TableSpec, run_multi_table_pipeline
+    from bireme_spark.streaming.replay import stamp_batch_mtime
+
+    src = tmp_path / "in"
+    if not src.exists():
+        src.mkdir()
+        seen: set[str] = set()
+        for i, batch in enumerate(_TWO_TABLE_BATCHES):
+            (src / f"b{i}.txt").write_text(
+                "\n".join(
+                    json.dumps({"database": "d", "table": t, "type": op, "ts": ts,
+                                "data": {"k": k, "v": v}})
+                    for t, op, k, v, ts in batch
+                )
+            )
+            stamp_batch_mtime(str(src), i, seen)
+    cfg = PipelineConfig(
+        sources=[
+            SourceConfig(
+                name="m",
+                kind="maxwell",
+                path=str(src),
+                table_map={"m.d.t1": "t1", "m.d.t2": "t2"},
+            )
+        ],
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        max_events_per_trigger=1,
+        num_buckets=4,
+    )
+    spec = TableSpec(StructType().add("k", "long").add("v", "double"), ("k",), ("k", "v"))
+    q = run_multi_table_pipeline(spark, cfg, {"t1": spec, "t2": spec}, available_now=True)
+    return cfg, q
+
+
+def _two_table_snapshot(spark, table, n_batches):
+    """The batch `snapshot` operator over the table's first n_batches."""
+    from bireme_spark.operators.cdc import snapshot
+
+    ops = {"insert": "I", "update": "U", "delete": "D"}
+    rows = [
+        (str(k), ops[op], ts * 1000, seq, v)
+        for seq, (t, op, k, v, ts) in enumerate(
+            c for batch in _TWO_TABLE_BATCHES[:n_batches] for c in batch
+        )
+        if t == table
+    ]
+    changes = spark.createDataFrame(
+        rows, "key string, op string, produce_time_ms long, seq long, v double"
+    )
+    return {(int(r.key), r.v) for r in snapshot(changes, payload_cols=("v",)).collect()}
+
+
+def _synced(spark, cfg, table):
+    from bireme_spark.streaming.pipeline import read_state
+
+    return {(r.k, r.v) for r in read_state(spark, f"{cfg.target_dir}/{table}").collect()}
+
+
+def test_multi_table_sink_writes_one_file_per_bucket_version(spark, tmp_path):
+    """Every committed bucket version is exactly one parquet file,
+    whatever the partitioning of the merged frame (base survivors
+    unioned with the batch's inserts)."""
+    import os
+
+    from bireme_spark.streaming import pipeline as pl
+
+    cfg, q = _start_two_table_stream(spark, tmp_path)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    for table in ("t1", "t2"):
+        target = f"{cfg.target_dir}/{table}"
+        assert pl._read_committed_batch(target) == len(_TWO_TABLE_BATCHES) - 1
+        for b, v in pl._read_manifest(target).items():
+            files = os.listdir(f"{target}/_sb={b}/_sv={v}")
+            assert len([f for f in files if f.endswith(".parquet")]) == 1, (table, b, v, files)
+        assert _synced(spark, cfg, table) == _two_table_snapshot(
+            spark, table, len(_TWO_TABLE_BATCHES)
+        )
+
+
+def test_multi_table_failure_in_one_table_keeps_the_other_committed(
+    spark, tmp_path, monkeypatch
+):
+    """The tables of a batch merge concurrently and commit on their
+    own. When t1's bucket write raises in batch 1, the query surfaces
+    the error only after t2 finished: t2's manifest is a committed
+    state at batch 1, t1's is still at batch 0. A restart from the
+    checkpoint replays batch 1 (idempotent for t2) and brings both
+    tables to the batch snapshot of the whole stream."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from bireme_spark.streaming import pipeline as pl
+
+    real_write = pl._write_changed_buckets
+    failed: list[str] = []
+
+    def fail_t1_once(bspark, target_dir, merged, changed, batch_id, **kw):
+        if target_dir.endswith("/t1") and batch_id == 1 and not failed:
+            failed.append(target_dir)
+            raise RuntimeError("simulated bucket write failure for t1")
+        real_write(bspark, target_dir, merged, changed, batch_id, **kw)
+
+    monkeypatch.setattr(pl, "_write_changed_buckets", fail_t1_once)
+    cfg, q = _start_two_table_stream(spark, tmp_path)
+    with pytest.raises(StreamingQueryException, match="simulated bucket write failure"):
+        q.awaitTermination(120)
+    assert len(failed) == 1
+    assert pl._read_committed_batch(f"{cfg.target_dir}/t1") == 0
+    assert pl._read_committed_batch(f"{cfg.target_dir}/t2") == 1
+    assert _synced(spark, cfg, "t1") == _two_table_snapshot(spark, "t1", 1)
+    assert _synced(spark, cfg, "t2") == _two_table_snapshot(spark, "t2", 2)
+
+    cfg, q2 = _start_two_table_stream(spark, tmp_path)
+    q2.awaitTermination(120)
+    assert q2.exception() is None
+    for table in ("t1", "t2"):
+        assert _synced(spark, cfg, table) == _two_table_snapshot(
+            spark, table, len(_TWO_TABLE_BATCHES)
+        )
+
+
+def test_run_concurrently_bounds_threads_and_raises_after_all_finish(spark):
+    """The per-table runner: never more than `limit` tasks at once,
+    every task runs even when some fail, the first failure (task
+    order) is re-raised only after all threads finished, and each
+    thread sees the caller's JVM local properties."""
+    import sys
+    import threading
+    import time
+
+    from pyspark import InheritableThread
+
+    from bireme_spark.streaming.pipeline import _run_concurrently
+
+    sc = spark.sparkContext
+    lock = threading.Lock()
+    state = {"active": 0, "peak": 0, "done": 0}
+    props: list[str | None] = []
+
+    def task(i):
+        with lock:
+            state["active"] += 1
+            state["peak"] = max(state["peak"], state["active"])
+        time.sleep(0.01)
+        props.append(sc.getLocalProperty("bireme.test.prop"))
+        with lock:
+            state["active"] -= 1
+            state["done"] += 1
+        if i in (5, 9):
+            raise ValueError(f"task {i}")
+
+    raised: list[Exception] = []
+
+    def drive():
+        try:
+            _run_concurrently([lambda i=i: task(i) for i in range(16)], 3)
+        except ValueError as e:
+            raised.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    sc.setLocalProperty("bireme.test.prop", "inherited")
+    try:
+        runner = InheritableThread(target=drive)
+        runner.start()
+        runner.join(60)
+    finally:
+        sc.setLocalProperty("bireme.test.prop", None)
+        sys.setswitchinterval(interval)
+    assert not runner.is_alive()
+    assert [str(e) for e in raised] == ["task 5"]
+    assert state["done"] == 16 and state["active"] == 0
+    assert 1 <= state["peak"] <= 3
+    assert props == ["inherited"] * 16
 
 
 class TestStreamingEwma:
